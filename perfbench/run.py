@@ -4,7 +4,7 @@
 
 Run from the root of a checkout of the repository. The run is a closed loop
 with a single client: one driver process on ``local[N]`` (N = usable cores)
-runs one job at a time.
+runs one job at a time, on the default JIT.
 
 1. Set-up: start the session, then generate the seeded input table and write
    it as parquet, three times; ``setup_s`` is the session start plus the
@@ -14,10 +14,14 @@ runs one job at a time.
 3. Outside any timed pass: the workload's own after-pass steps (the feature
    job's resume and read), then the correctness gate. A failed gate marks
    every pass failed and ``correct`` false.
-4. Warm passes until ``--seconds`` have passed (at least two);
-   ``turns_per_s`` is input turns over the median warm pass.
+4. Warm passes until ``--seconds`` have passed (at least three);
+   ``turns_per_s`` is input turns over the median warm pass. On the default
+   (C2) JIT a pass still speeds up for several passes after the cold one;
+   the after-pass steps and the gate take the steepest part of that curve
+   out of the window, and the median of three or more the rest of it.
    ``peak_rss_mb`` is the peak resident memory of the process tree (driver
-   JVM and Python workers) over set-up and the timed passes.
+   JVM and Python workers) over set-up and the timed passes. A full
+   collection of the driver heap, untimed, ends each generation and pass.
 5. The same-window compute control.
 
 With ``--trace 1`` the warm window is halved, and then the session is
@@ -107,7 +111,7 @@ SPANS = (
     "pit_read.s",
 )
 SETUP_REPS = 3
-MIN_WARM_PASSES = 2
+MIN_WARM_PASSES = 3
 DRIVER_MEMORY = "3g"
 
 
@@ -119,15 +123,12 @@ def start_session(work: str, cores: int, extra: dict[str, str] | None = None):
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # ParallelGC as bench.py uses it, on a fixed, pre-touched heap: the
-        # resident set then does not follow the collector's adaptive sizing,
-        # and moves with what runs outside the heap (Python workers above all).
-        # The JIT stops at C1: under C2 each JVM settled at its own speed, and
-        # warm passes over the same input differed by up to a third between
-        # runs on a 4-core host; C1 runs agree within a few percent.
+        # ParallelGC as bench.py uses it, on a fixed heap that is not
+        # pre-touched: only the heap pages the run uses are resident, so more
+        # live data shows in peak_rss_mb. The JIT is the default one.
         "spark.driver.extraJavaOptions": (
             f"-XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy -Xms{DRIVER_MEMORY} "
-            f"-XX:+AlwaysPreTouch -XX:TieredStopAtLevel=1 -XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
+            f"-XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
         ),
         **(extra or {}),
     }
@@ -163,10 +164,20 @@ def report(name: str, unit: str, values: list[float]) -> None:
     print(f"perfbench metric {name} unit={unit} n={len(values)} median={med:.6g} q1={q1:.6g} q3={q3:.6g}")
 
 
+def full_gc(spark) -> None:
+    """A full collection of the driver JVM's heap, between the steps of a
+    run. Each step then starts from the live set alone, so the heap's
+    high-water mark, and with it peak_rss_mb, is that of the largest step
+    rather than of garbage that happened to pile up across steps before
+    the collector ran."""
+    spark.sparkContext._jvm.System.gc()
+
+
 def timed_passes(ctx, workload, first: int, seconds: float, minimum: int) -> list[float]:
     walls = []
     deadline = time.perf_counter() + seconds
     while len(walls) < minimum or time.perf_counter() < deadline:
+        full_gc(ctx.spark)
         t0 = time.perf_counter()
         workload.run_pass(ctx, first + len(walls))
         walls.append(time.perf_counter() - t0)
@@ -196,12 +207,12 @@ def run(name: str, seed: int, seconds: float, trace: bool) -> dict:
             with phases.span("datagen"):
                 table = datagen.transcripts(spark, workload.shape, seed)
                 table.df.write.mode("overwrite").parquet(input_path)
+            full_gc(spark)
         ctx = Context(spark, input_path, work, seed, table.sizes, detail=trace)
         with phases.span("cold"):
             workload.run_pass(ctx, 0)
+        full_gc(spark)
         ctx.spans = hostprobe.Spans()  # per-layer spans leave the cold pass out
-        # The gate runs between the cold pass and the warm window: its own
-        # full run of the workload warms the JIT further before timing.
         sampler.stop()
         if workload.after_passes is not None:
             with phases.span("after"):
@@ -210,7 +221,7 @@ def run(name: str, seed: int, seconds: float, trace: bool) -> dict:
             problems, counts = workload.gate(ctx)
         sampler.start()
         warm = timed_passes(ctx, workload, 1, seconds / 2 if trace else seconds,
-                            2 if trace else MIN_WARM_PASSES)
+                            MIN_WARM_PASSES)
         sampler.stop()
         attempted = 1 + len(warm)
         with phases.span("control"):

@@ -3,12 +3,16 @@ plain chain, and the correctness gate.
 
 Run from the repository root::
 
-    python3 -m pytest perfbench -q
+    python3 -m pytest perfbench/selftest.py -q
+
+The file name keeps these tests out of a bare ``python -m pytest`` of the
+repository: they start their own Spark session, which would otherwise be the
+session the repository's tests run in.
 
 ``fixtures/pit_chain_eventlog.jsonl`` is a recorded event log of one traced
 ``pit_chain`` pass over a 20-conversation table, cut down to the events the
-parser reads. ``PYTHONPATH=. python3 perfbench/test_perfbench.py`` records
-it again.
+parser reads. ``PYTHONPATH=. python3 perfbench/selftest.py`` records it
+again.
 """
 
 from __future__ import annotations

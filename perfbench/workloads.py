@@ -19,7 +19,6 @@ timed passes and returns (problems, per-layer counts).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import time
@@ -49,17 +48,14 @@ from featureextraction_spark.plans.feature_pipeline import (
 from featureextraction_spark.plans.pit_read import point_in_time_read
 from featureextraction_spark.sources.feature_store import FeatureStore
 from featureextraction_spark.streaming.manifest import CheckpointedRunner
+from scripts import run_pipeline
 
 SAMPLE_CONVERSATIONS = 6  # besides the largest one
 PROBE_LEAD_S = 30  # chain probes sit this long before each user turn
 GAP_SECONDS = 1800
 PROBES_PER_CONV = 3  # scripts/run_pipeline.py default
 JOB_STAGES = ["features", "probes", "store", "turn_state"]
-# The shipped job's 256 kernel buckets are sized for thousands of
-# conversations (~16 per bucket at 4,000). This table has 150, so the bucket
-# count is scaled with it to keep ~10 conversations per bucket; at 256 the
-# pass would time per-task Python start-up, not the kernel.
-FEATURE_BUCKETS = 16
+RUN_ID = "run1"  # scripts/run_pipeline.py default
 SALT_BUCKET_US = 86_400_000_000  # the salted operators' default bucket
 
 
@@ -175,18 +171,22 @@ def gate_chain(ctx: Context, chain: Callable[[DataFrame], DataFrame],
 
 # -- the resumable feature job ------------------------------------------------
 
-def input_fingerprint(path: str) -> str:
-    """File names and sizes, as ``scripts/run_pipeline.py`` computes it."""
-    parts = [
-        f"{f}:{os.path.getsize(os.path.join(path, f))}"
-        for f in sorted(os.listdir(path))
-        if f.endswith(".parquet") or f == "_SUCCESS"
-    ]
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
+# The shipped job's 256 kernel buckets are sized for thousands of
+# conversations (~16 per bucket at 4,000). This table has 150, so the bucket
+# count is scaled with it to keep ~10 conversations per bucket. At 256 a warm
+# pass took 14 s instead of 3-5, 11 s of it in the features stage, which then
+# runs 256 Python tasks for 150 conversations.
+FEATURE_BUCKETS = 16
+MANIFEST_SPANS = {
+    "turn_state": "manifest.stage_s.turn_state",
+    "probes": "manifest.stage_s.probes",
+    "features": "manifest.stage_s.features",
+}
 
 
 def job_probes(tr: DataFrame) -> DataFrame:
-    """The last ``PROBES_PER_CONV`` turns of each conversation."""
+    """The last ``PROBES_PER_CONV`` turns of each conversation: the probes
+    stage of ``scripts/run_pipeline.py``, a closure there."""
     w = Window.partitionBy("conv_id").orderBy(F.desc("ts"), F.desc("turn_idx"))
     return (
         tr.withColumn("__rn", F.row_number().over(w))
@@ -197,43 +197,48 @@ def job_probes(tr: DataFrame) -> DataFrame:
 
 
 def run_job(ctx: Context, work: str, spans: Spans) -> tuple[CheckpointedRunner, FeatureStore, int]:
-    """One run of the resumable job over ``work``: the stages and store
-    protocol of ``scripts/run_pipeline.py``, each call timed into ``spans``."""
+    """One run over ``work`` of the stages and store protocol of
+    ``scripts/run_pipeline.py``, with ``FEATURE_BUCKETS`` kernel buckets.
+    The store append and its read-back are timed into ``spans``."""
     spark = ctx.spark
-    fp = input_fingerprint(ctx.input_path)
-    ckpt = CheckpointedRunner(spark, os.path.join(work, "ckpt"), "run1")
-    with spans.span("manifest.stage_s.turn_state"):
-        state = ckpt.stage("turn_state", lambda: turn_state(ctx.transcripts(), GAP_SECONDS),
-                           fingerprint=fp)
-    with spans.span("manifest.stage_s.probes"):
-        probes = ckpt.stage("probes", lambda: job_probes(ctx.transcripts()), fingerprint=fp)
-    with spans.span("manifest.stage_s.features"):
-        features = ckpt.stage(
-            "features",
-            lambda: point_in_time_features(None, probes, GAP_SECONDS,
-                                           num_buckets=FEATURE_BUCKETS, state=state),
-            fingerprint=fp,
-        )
+    fp = run_pipeline.input_fingerprint(ctx.input_path)
+    ckpt = CheckpointedRunner(spark, os.path.join(work, "ckpt"), RUN_ID)
+    state = ckpt.stage("turn_state", lambda: turn_state(ctx.transcripts(), GAP_SECONDS),
+                       fingerprint=fp)
+    probes = ckpt.stage("probes", lambda: job_probes(ctx.transcripts()), fingerprint=fp)
+    features = ckpt.stage(
+        "features",
+        lambda: point_in_time_features(None, probes, GAP_SECONDS,
+                                       num_buckets=FEATURE_BUCKETS, state=state),
+        fingerprint=fp,
+    )
     store = FeatureStore(spark, os.path.join(work, "feature_store"), key_cols=["conv_id", "ts"])
     manifest = ckpt.read_manifest("store")
+    tag = f"{RUN_ID}:{fp}:store"
     if manifest is not None and manifest.get("input_fingerprint") == fp:
         ckpt.resumed.append("store")
         version = manifest["store_version"]
     else:
         t0 = time.perf_counter()
-        with spans.span("store.append_s"):
-            version = store.append(features, tag=f"run1:{fp}:store")
+        version = store.find_version_by_tag(tag)
+        adopted = version is not None
+        if not adopted:
+            with spans.span("store.append_s"):
+                version = store.append(features, tag=tag)
         with spans.span("store.read_s"):
             n = store.read(version=version).count()
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        ckpt.record("store", fp, n, wall_ms, extra={"store_version": version})
+        ckpt.record("store", fp, n, int((time.perf_counter() - t0) * 1000),
+                    extra={"store_version": version}, resumed=adopted)
     store.read().count()
     return ckpt, store, version
 
 
 def job_pass(ctx: Context, i: int) -> None:
     work = os.path.join(ctx.work, f"job{i}")
-    _, store, version = run_job(ctx, work, ctx.spans)
+    ckpt, store, version = run_job(ctx, work, ctx.spans)
+    for m in ckpt.manifest_rows():  # the runner's own per-stage wall times
+        if m["stage"] in MANIFEST_SPANS:
+            ctx.spans.seconds[MANIFEST_SPANS[m["stage"]]].append(m["wall_ms"] / 1000)
     previous = ctx.state.get("job_work")
     if previous:
         shutil.rmtree(previous, ignore_errors=True)
@@ -270,13 +275,13 @@ def job_after_passes(ctx: Context) -> None:
     reps = 3 if ctx.detail else 1
     for _ in range(reps):
         with ctx.spans.span("manifest.resume_s"):
-            ckpt, _, _ = run_job(ctx, ctx.state["job_work"], Spans())
+            ckpt, _, _ = run_job(ctx, work, Spans())
     ctx.state["resumed"] = sorted(set(ckpt.resumed))
     ctx.state["recomputed"] = sorted(set(ckpt.recomputed))
     probes = label_probes(ctx).cache()
     ctx.state["label_probes"] = probes
     ctx.state["label_rows"] = probes.count()
-    vectors = ctx.state["store"].read(ctx.state["version"])
+    vectors = store.read(version)
     for _ in range(reps):
         with ctx.spans.span("pit_read.s"):
             force(pit_read(ctx, vectors, probes))
